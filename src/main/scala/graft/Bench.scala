@@ -1,45 +1,13 @@
 package graft
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
-
-/** Accumulates shuffle write bytes across stages; reset per query so the
-  * bench can report the scale-relevant metric (shuffle VOLUME, the thing
-  * that actually grows with data size) next to wall time.
-  */
-private final class ShuffleTally extends SparkListener {
-  val bytes = new java.util.concurrent.atomic.AtomicLong(0L)
-  override def onStageCompleted(s: SparkListenerStageCompleted): Unit =
-    bytes.addAndGet(s.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
-}
 
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "3").toInt
-    // Shuffle-partition override for scale gating: the driver default
-    // (= cpus) is right at sf0.1, but a ×100 ScaleGen decade grows the
-    // per-partition aggregation working set ×100 at fixed partitions —
-    // on a real cluster partitions scale with data, so the decade gate
-    // measures with SPARK_GRAFT_SHUFFLE_PARTS ∝ data to keep the
-    // per-partition working set comparable across decades.
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // noise isolation (round 8): the DEFAULT codegen cache holds 100
-      // compiled classes — a 260+-query suite evicts everything every
-      // rep, so each rep pays janino compile + JIT tier-up again and the
-      // per-query min becomes tier-up luck (measured: identical-code
-      // re-runs drifted 7% median / 31% p90 per query). Sized to hold
-      // the whole suite, reps 2-3 run on warm compiled+JITed code.
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.defaultCpus
+    val spark = Session.local(cpus)
+    val parts = spark.conf.get("spark.sql.shuffle.partitions")
     // JVM/codegen warmup so the first measured query doesn't absorb
     // session startup (aggregation + shuffle + codegen + parquet reader).
     spark.range(1000000).selectExpr("sum(id % 7)", "count(distinct id % 13)").collect()
@@ -63,7 +31,7 @@ object Bench {
       spark.catalog.clearCache()
       t
     }
-    val tally = new ShuffleTally
+    val tally = new Tally
     spark.sparkContext.addSparkListener(tally)
     def drain(): Unit =
       org.apache.spark.graft.ListenerSync.drain(spark.sparkContext)
@@ -108,9 +76,9 @@ object Bench {
       // round's queries (part of the measured cross-run drift)
       System.gc()
       qlist.zipWithIndex.foreach { case ((name, fn), qi) =>
-        if (r == reps - 1) { drain(); tally.bytes.set(0L) }
+        if (r == reps - 1) { drain(); tally.reset() }
         repTimes(qi)(r) = runOnce(name, fn)
-        if (r == reps - 1) { drain(); shuffleMb(qi) = tally.bytes.get / 1048576.0 }
+        if (r == reps - 1) { drain(); shuffleMb(qi) = tally.shufW.get / 1048576.0 }
       }
     }
     val results = qlist.zipWithIndex.map { case ((name, _), qi) =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
 import scala.util.Random
 
 /** Differential SQL fuzzing: deterministically generate random queries in
@@ -241,16 +239,7 @@ object FuzzVerify {
     val outDir = args(1)
     val n = args.lift(2).map(_.toInt).getOrElse(50)
     val seed = args.lift(3).map(_.toLong).getOrElse(42L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     tables.foreach(t =>
       Tables.table(spark, sfDir, t.name).createOrReplaceTempView(t.name))
     new java.io.File(outDir).mkdirs()
@@ -273,15 +262,7 @@ object FuzzVerify {
       try spark.sql(sql).coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable => System.err.println(s"[fuzz] $name failed: ${e.getMessage}") }
     }
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = sqls.map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Verify.writeOracleSql(outDir, sqls)
     spark.stop()
   }
 }

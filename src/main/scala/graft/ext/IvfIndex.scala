@@ -76,8 +76,9 @@ object IvfIndex {
   /** Beam width of the greedy descent: how many nodes survive the
     * per-vector ranking at each tree level. Per-vector assignment work is
     * ~[[DefaultBeam]]·[[TreeFanout]]·log₄(k) scored pairs. Swept against
-    * this corpus's measured isotropy (tools/IvfSweep, round 9): at sf0.1
-    * (k=8, depth 1) the descent is EXHAUSTIVE — beam 8 > every level —
+    * this corpus's measured isotropy (BENCH_sf10.md, "Round-9: the
+    * LOG-DEPTH TREE": the recall contract and the declined beam-16 row):
+    * at sf0.1 (k=8, depth 1) the descent is EXHAUSTIVE — beam 8 > every level —
     * so recall@3 = 0.867, bit-identical to the flat index; at sf1 (k=78,
     * depth 3) the beam-8 fine frontier is ~32 of 78 cells and recall@3
     * measures 0.500 — ABOVE the round-8 two-level route's 0.367 at the
@@ -211,17 +212,7 @@ object IvfIndex {
     * co-partitioned join, the same wide-sort lesson the corpus descent
     * records.
     */
-  def buildTree(s: org.apache.spark.sql.SparkSession, cent: DataFrame): RoutingTree =
-    buildTree(s, cent, DefaultBeam)
-
-  /** As the 2-arg form with an explicit insertion beam — the sweep knob
-    * (tools/IvfSweep); production call sites and the oracle stay on
-    * [[DefaultBeam]].
-    */
-  def buildTree(
-      s: org.apache.spark.sql.SparkSession,
-      cent: DataFrame,
-      beam: Int): RoutingTree = {
+  def buildTree(s: org.apache.spark.sql.SparkSession, cent: DataFrame): RoutingTree = {
     import scala.jdk.CollectionConverters._
     val fine = cent.collect().sortBy(_.getLong(0)) // by cid — cent is a bounded local relation
     // levels(0) = fine codebook; shrink by TreeFanout until 1 node or MaxLevels
@@ -256,7 +247,7 @@ object IvfIndex {
         val stepU = built(u).select(
           col("pcid").as("fcid"), col("ccid").as("ncid"),
           col("ccv").as("nv"), col("ccn").as("nn"))
-        fr = fr.filter(col("rk_p") <= beam)
+        fr = fr.filter(col("rk_p") <= DefaultBeam)
           .select("ccid", "fcid")
           .join(broadcast(stepU), Seq("fcid"))
           .join(child, Seq("ccid")) // co-partitioned by ccid (post-window)
@@ -299,8 +290,9 @@ object IvfIndex {
     * recorded; IvfSpec pins the exchange count so a regression that
     * re-shuffles per level fails loudly. A routing miss at any level
     * loses that subtree — the same recall-for-cost trade as the fine
-    * probes themselves, swept (tools/IvfSweep) and mirrored exactly by
-    * the oracle, which replays the identical deterministic route.
+    * probes themselves, swept (BENCH_sf10.md, round-9 recall contract)
+    * and mirrored exactly by the oracle, which replays the identical
+    * deterministic route.
     */
   def assignCells(vec: DataFrame, idCol: String, cent: DataFrame, probes: Int): DataFrame =
     assignCellsTree(vec, idCol, buildTree(vec.sparkSession, cent), probes)
@@ -325,19 +317,7 @@ object IvfIndex {
       vec: DataFrame,
       idCol: String,
       tree: RoutingTree,
-      probes: Int): DataFrame =
-    assignCellsTree(vec, idCol, tree, probes, DefaultBeam)
-
-  /** As the 4-arg form with an explicit descent beam — the sweep knob
-    * (tools/IvfSweep); production call sites and the oracle stay on
-    * [[DefaultBeam]].
-    */
-  def assignCellsTree(
-      vec: DataFrame,
-      idCol: String,
-      tree: RoutingTree,
-      probes: Int,
-      beam: Int): DataFrame = {
+      probes: Int): DataFrame = {
     val parts = vec.sparkSession.sessionState.conf.numShufflePartitions
     // the ONE exchange + ONE materialization: id-partitioned, id-sorted,
     // CACHED — InMemoryRelation preserves partitioning AND ordering (a
@@ -358,10 +338,10 @@ object IvfIndex {
       .withColumn("cos_t", Vectors.dot(col("v"), col("ccv")) / (col("nrm") * col("ccn")))
       .select("__vid", "ccid", "cos_t") // narrow BEFORE the rank
       .withColumn("rk_t", row_number().over(w))
-      .filter(col("rk_t") <= beam)
+      .filter(col("rk_t") <= DefaultBeam)
       .select("__vid", "ccid")
     for (lvl <- tree.start to 1 by -1) {
-      val keep = if (lvl == 1) probes else beam
+      val keep = if (lvl == 1) probes else DefaultBeam
       fr = fr
         .select(col("__vid"), col("ccid").as("pcid"))
         .join(v0, Seq("__vid")) // co-partitioned, v0 side pre-sorted

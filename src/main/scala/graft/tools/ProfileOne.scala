@@ -1,69 +1,20 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, SparkListenerJobStart}
+import graft.{Session, SparkEntry, Tally}
 
-/** Empirical per-query profile: wall seconds plus the task-level totals
-  * that say WHERE the time goes — task count, input bytes/records read
-  * (re-scan factor vs the table size), shuffle read/write bytes, spill,
-  * GC, and executor run/CPU time. Evidence layer for the optimization
-  * rounds: a 3000-line plan with 150 Exchanges may still run few stages
-  * if AQE reuses them — only these counters settle it.
+/** Per-lane profile: for each rep, the wall seconds of Bench's action (a
+  * noop-sink write, then `clearCache()`) next to the [[graft.Tally]]
+  * totals of that rep — jobs, stages, tasks, input, shuffle, spill, run,
+  * CPU and GC time.
   *
-  * Usage: runMain graft.tools.ProfileOne <sfDir> <name> [reps]
+  * Usage: runMain graft.tools.ProfileOne <sfDir> <name>[,<name>...] [reps=2]
   */
 object ProfileOne {
-  private final class Tally extends SparkListener {
-    val input = new java.util.concurrent.atomic.AtomicLong(0L)
-    val inputRec = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shufW = new java.util.concurrent.atomic.AtomicLong(0L)
-    val shufR = new java.util.concurrent.atomic.AtomicLong(0L)
-    val spill = new java.util.concurrent.atomic.AtomicLong(0L)
-    val tasks = new java.util.concurrent.atomic.AtomicLong(0L)
-    val stages = new java.util.concurrent.atomic.AtomicLong(0L)
-    val jobs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val runMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val cpuMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    val gcMs = new java.util.concurrent.atomic.AtomicLong(0L)
-    override def onJobStart(j: SparkListenerJobStart): Unit = jobs.incrementAndGet()
-    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
-      val m = s.stageInfo.taskMetrics
-      if (sys.env.contains("SPARK_GRAFT_STAGES"))
-        println(f"    stage ${s.stageInfo.stageId}%4d tasks=${s.stageInfo.numTasks}%4d " +
-          f"run=${m.executorRunTime / 1000.0}%6.2fs cpu=${m.executorCpuTime / 1e9}%6.2fs " +
-          f"in=${m.inputMetrics.recordsRead}%9d rec shW=${m.shuffleWriteMetrics.bytesWritten / 1048576.0}%7.1fMB " +
-          f"shR=${m.shuffleReadMetrics.totalBytesRead / 1048576.0}%7.1fMB  [${s.stageInfo.name.take(60)}]")
-      input.addAndGet(m.inputMetrics.bytesRead)
-      inputRec.addAndGet(m.inputMetrics.recordsRead)
-      shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-      shufR.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      spill.addAndGet(m.diskBytesSpilled + m.memoryBytesSpilled)
-      tasks.addAndGet(s.stageInfo.numTasks.toLong)
-      stages.incrementAndGet()
-      runMs.addAndGet(m.executorRunTime)
-      cpuMs.addAndGet(m.executorCpuTime / 1000000L)
-      gcMs.addAndGet(m.jvmGCTime)
-    }
-    def reset(): Unit = Seq(input, inputRec, shufW, shufR, spill, tasks, stages, jobs, runMs, cpuMs, gcMs).foreach(_.set(0L))
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").toSeq
     val reps = args.lift(2).map(_.toInt).getOrElse(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "8192")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     spark.range(1000000).selectExpr("sum(id % 7)").collect()
     val t = new Tally
     spark.sparkContext.addSparkListener(t)

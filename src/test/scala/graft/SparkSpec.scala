@@ -3,29 +3,11 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session for specs — one per suite, reference configs
-  * (UTC, non-ANSI) matching Verify/Bench.
+/** Shared local session for specs — one per suite, on the same
+  * [[Session]] policy as every main.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(
-        "spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    // INFO logging measured as a first-order cost of the suite itself:
-    // a full `sbt test` writes >0.5 GB of scheduler INFO lines (r11),
-    // all of it synchronous console I/O inside the tests' Spark jobs
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.local(cpus = 4)
 
   def resource(name: String): String =
     getClass.getResource(s"/$name").getPath

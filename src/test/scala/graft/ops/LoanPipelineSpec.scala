@@ -91,6 +91,21 @@ class LoanPipelineSpec extends SparkSpec {
     assert(back.columns.contains("date") && back.columns.contains("time"))
   }
 
+  test("repeated runs leave no cached blocks behind") {
+    // a long-lived caller (a scheduler worker, a notebook) runs the ETL
+    // many times in one session: nothing may outlive a run. The input is
+    // a fresh copy so no earlier test's plan can already be cached.
+    val dir = Files.createTempDirectory("graft_etl_rerun")
+    val csv = Files.copy(java.nio.file.Path.of(resource("loans_basic.csv")), dir.resolve("loans.csv"))
+    val before = spark.sparkContext.getRDDStorageInfo.filter(_.isCached).map(_.id).toSet
+    (1 to 3).foreach { i =>
+      LoanPipeline.runEtl(spark, csv.toString, s"$dir/parquet$i",
+        insightsJsonPath = Some(s"$dir/insights$i.json"))
+    }
+    val held = spark.sparkContext.getRDDStorageInfo.filter(r => r.isCached && !before(r.id))
+    assert(held.isEmpty, s"cached after 3 runs: ${held.map(_.name).mkString(", ")}")
+  }
+
   test("insights JSON golden shape matches the reference document") {
     val s = Insights.Summary(100, None, None)
     assert(Insights.toJson(s) == "{\n  \"total_loans\": 100\n}")

@@ -12,24 +12,7 @@ import org.scalacheck.Prop.forAll
   */
 object OperatorProps extends Properties("graft.operators") {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config(
-        "spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh_props").toString)
-      .getOrCreate()
-    // this suite runs ~11k tiny jobs; at the default INFO level it wrote
-    // ~300k scheduler log lines of synchronous console I/O (r11 timing)
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  private lazy val spark: SparkSession = graft.Session.local(cpus = 2)
 
   import scala.jdk.CollectionConverters._
 

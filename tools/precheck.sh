@@ -2,7 +2,8 @@
 # Driver-parity pre-submit check: runs graft.Verify + the DuckDB oracle
 # compare (tools/check_oracle.py) at all three scale factors — the same
 # pipeline the round driver and the judge run. Use before every commit
-# that touches a query or its oracle SQL.
+# that touches a query or its oracle SQL. Verify runs on graft.Session's
+# default cores: SPARK_GRAFT_CPUS, else the machine's.
 #
 #   tools/precheck.sh [sf ...]     # default: 0.001 0.01 0.1
 set -euo pipefail
@@ -13,7 +14,7 @@ fail=0
 for sf in "${sfs[@]}"; do
   out="/tmp/precheck_sf$sf"
   echo "== sf$sf: Verify -> $out"
-  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-8}" sbt -batch \
+  sbt -batch \
     "runMain graft.Verify /root/testdata/sf$sf $out" > "/tmp/precheck_sf$sf.log" 2>&1 \
     || { echo "VERIFY FAILED at sf$sf (see /tmp/precheck_sf$sf.log)"; fail=1; continue; }
   n_warn=$(grep -c "No Partition Defined" "/tmp/precheck_sf$sf.log" || true)
